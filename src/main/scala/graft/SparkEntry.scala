@@ -41,7 +41,4 @@ object SparkEntry {
     * the same parquet tables. Omit for non-SQL-expressible ops. */
   def oracleSql: Map[String, String] =
     registry.flatMap(q => q.oracle.map(q.name -> _)).toMap
-
-  /** Headline subset for Bench. */
-  def benchQueries: Seq[String] = registry.filter(_.bench).map(_.name)
 }

@@ -168,7 +168,7 @@ object Dijkstra {
     * `Graph.pregel` can't deliver: lineage truncation every
     * [[CheckpointInterval]] supersteps (the built-in overflowed the stack
     * on the ~1,600-superstep hidiam probe), and SUPERSTEP BATCHING
-    * ([[SuperstepBatchMax]]): up to 32 (join → relax) rounds chained
+    * ([[SuperstepBatchMax]]): up to 8 (join → relax) rounds chained
     * lazily per Spark job instead of Pregel's one-job-one-count-per-
     * superstep discipline. After a truncation the frontier is re-derived
     * with one full-edge gather: `sendImprove`'s guard reads the CURRENT
@@ -176,10 +176,8 @@ object Dijkstra {
     * regenerate — the fixpoint, including the min-pred tie-break, is
     * unchanged. */
   def sssp[V: ClassTag](g: Graph[V, Double], source: VertexId,
-      maxIterations: Int = Int.MaxValue,
-      batchMax: Int = SuperstepBatchMax): Graph[State, Double] = {
+      maxIterations: Int = Int.MaxValue): Graph[State, Double] = {
     require(g.edges != null)
-    require(batchMax >= 1, s"batchMax must be >= 1, got $batchMax")
     import org.apache.spark.graphx.graftbridge.GraphXBridge
     var cur: Graph[State, Double] = adaptParts(g.mapVertices((id, _) =>
       if (id == source) (0.0, id) else (Double.PositiveInfinity, -1L)).cache())
@@ -208,7 +206,7 @@ object Dijkstra {
       // action populates it before any parent is released)
       val rounds = math.max(1, math.min(batch,
         math.min(maxIterations - iters, CheckpointInterval - sinceTrunc)))
-      // (rounds is also <= batchMax because batch never exceeds it)
+      // (rounds is also <= SuperstepBatchMax because batch never exceeds it)
       val prev = cur
       val prevMsgs = msgs
       val interim = scala.collection.mutable.ListBuffer.empty[Graph[State, Double]]
@@ -245,7 +243,7 @@ object Dijkstra {
         msgs = cur.aggregateMessages[State](sendImprove, mergeState).cache()
         n = msgs.count()
       }
-      batch = math.min(batchMax, batch << 1)
+      batch = math.min(SuperstepBatchMax, batch << 1)
     }
     msgs.unpersist(blocking = false)
     cur
@@ -322,7 +320,23 @@ object Dijkstra {
     *     round's relax job itself materializes the joined graph — no
     *     separate vertices.count/edges.count actions — and the previous
     *     graph/messages unpersist only after that job completes, so no job
-    *     ever re-walks lineage. */
+    *     ever re-walks lineage.
+    *
+    * Why this, not [[sssp]], is the default distributed engine — measured
+    * (GRAPHBENCH_r04 + the r06 repeat-pair study; 400k vertices, same-JVM
+    * pairs only, the default Δ = 32×mean, every timed run
+    * equality-checked). Across 5 paired runs per shape
+    * (`GRAPHBENCH_r06.json repeat_pairs_x32`): delta wins the
+    * low-diameter expander outright (6.6 s vs 12.6 s in the r06 sweep)
+    * and wins the wide-weight shape in 4 of 5 pairs (delta stable at
+    * 12.5–15.1 s; Pregel spans 12.2–22.0 s). On the moderate-diameter
+    * sparse shape Pregel holds a ~13% median edge (≈48 s vs ≈56 s, 4/5
+    * pairs) but carries an unbounded tail — its r04 run hit 134.4 s, 2.4×
+    * the delta band, and its cross-sweep history spans 41–134 s while
+    * delta stays in a narrow 52–70 s band. Two outright wins plus a
+    * bounded worst case on the third beat a one-shape median edge bought
+    * with tail risk. [[distances]]/[[sssp]] remain as the
+    * label-correcting reference the equality specs compare against. */
   def deltaSssp[V: ClassTag](g: Graph[V, Double], source: VertexId,
       delta: Double = 0.0, stats: Option[DeltaStats] = None,
       batchMax: Int = SuperstepBatchMax): Graph[State, Double] = {
@@ -413,13 +427,11 @@ object Dijkstra {
         }
       }.cache()
 
-    val debug = sys.env.contains("GRAFT_DELTA_DEBUG")
     var bucket = 0L
     var done = false
     while (!done) {
       val lo = bucket * dlt
       val hi = lo + dlt
-      val t0 = if (debug) System.nanoTime() else 0L
 
       // light-edge fixpoint inside the current bucket: the opening frontier
       // is the bucket's members; afterwards only last round's receivers can
@@ -521,7 +533,6 @@ object Dijkstra {
         .filter { case (_, (d, _)) => !d.isInfinite && d >= hi }
         .map { case (_, (d, _)) => math.floor(d / dlt).toLong }
         .fold(Long.MaxValue)(math.min)
-      if (debug) println(f"[delta] bucket=$bucket inner=$iters ${(System.nanoTime() - t0) / 1e9}%.1f s")
       // max(…, bucket+1) guards the float boundary: dist == hi can make
       // floor(dist/Δ) round back to the current bucket and stall the loop
       if (nextBucket == Long.MaxValue) done = true
@@ -549,35 +560,10 @@ object Dijkstra {
     var heavySupersteps: Long = 0L
     /** Materializing actions in the light phase (the per-batch counts). */
     var lightBatches: Long = 0L
-    // `light_rounds` (r10): renamed from `light_supersteps`, whose meaning
-    // silently changed in r9 from job count to rounds-executed (padded to
-    // batch boundaries) — the old key under the new semantics made r7-era
-    // artifact comparisons read as apples-to-apples when they weren't.
-    // `note` records the break for anyone diffing historical GRAPHBENCH
-    // artifacts.
+    // `light_rounds` was `light_supersteps` (a job count) before r9; the
+    // new key keeps historical GRAPHBENCH diffs honest, `note` says why
     def json: String =
       s"""{"delta":$delta,"buckets":$buckets,"light_rounds":$lightSupersteps,"heavy_supersteps":$heavySupersteps,"light_batches":$lightBatches,"note":"light_rounds = rounds executed incl. batch padding (pre-r9 artifacts report this field as light_supersteps = jobs; not comparable)"}"""
-  }
-
-  /** Single-pair path as an ordered vertex-id list (source..target), or None
-    * if unreachable — mirrors GDS stream yielding no row.
-    *
-    * @deprecated collects the FULL reachable (id → state) map to the
-    * driver, which is exactly the scale-killer `autoPath` exists to avoid:
-    * use [[autoPath]] (local heap below the edge threshold, distributed
-    * predecessor walk via [[reconstructDistributed]] above it). Kept only
-    * as the simplest reference implementation for equality tests. */
-  @deprecated("use autoPath: this collects the full reachable vertex map to the driver", "round3")
-  def shortestPath[V: ClassTag](
-      g: Graph[V, Double], source: VertexId, target: VertexId): Option[(Double, Seq[VertexId])] = {
-    val state = sssp(g, source).vertices
-      .filter { case (_, (d, _)) => !d.isInfinite }
-      .collectAsMap()
-    state.get(target).map { case (dist, _) =>
-      var ids = List(target)
-      while (ids.head != source) ids = state(ids.head)._2 :: ids
-      (dist, ids)
-    }
   }
 
   // ---- scale-adaptive dispatch ----
@@ -628,25 +614,14 @@ object Dijkstra {
     dist.toMap
   }
 
-  private def smallEnough[V: ClassTag](g: Graph[V, Double], threshold: Long): Boolean =
-    g.edges.count() <= threshold
-
-  /** DataFrame-level adaptive SSSP: `edges` must have (src, dst, w) columns.
-    * Small edge sets are collected and solved driver-local without ever
-    * constructing a GraphX graph (saves the RDD conversion + partitioning
-    * jobs); large ones build the distributed graph and run delta-stepping.
-    * Seq-returning convenience over [[ssspFrameFromEdges]] — ONE dispatch
-    * implementation, not two to keep in sync. */
-  def ssspFromEdges(edges: org.apache.spark.sql.DataFrame, source: VertexId,
-      threshold: Long = DefaultLocalThreshold): Seq[(VertexId, Double)] =
-    ssspFrameFromEdges(edges, source, threshold).collect()
-      .map(r => (r.getLong(0), r.getDouble(1))).toSeq
-
-  /** DataFrame-returning adaptive SSSP — the result STAYS distributed on
-    * the large branch: the distance table is a DataFrame over the SSSP
-    * vertex RDD, never a driver-side Seq (at full scale the reachable set
-    * is itself a big table; callers sort/limit/join it like any other).
-    * Columns: (id long, dist double). */
+  /** DataFrame-level adaptive SSSP: `edges` must have (src, dst, w)
+    * columns. Small edge sets are collected and solved driver-local
+    * without ever constructing a GraphX graph (saves the RDD conversion +
+    * partitioning jobs); large ones build the distributed graph and run
+    * delta-stepping. The result STAYS distributed on the large branch:
+    * a DataFrame over the SSSP vertex RDD, never a driver-side Seq (at
+    * full scale the reachable set is itself a big table). Columns:
+    * (id long, dist double). */
   def ssspFrameFromEdges(edges: org.apache.spark.sql.DataFrame, source: VertexId,
       threshold: Long = DefaultLocalThreshold): org.apache.spark.sql.DataFrame = {
     import org.apache.spark.sql.functions.col
@@ -675,43 +650,11 @@ object Dijkstra {
     }
   }
 
-  /** Distances via the delta-stepping engine — the default distributed
-    * path, justified by its own benchmark (GRAPHBENCH_r04 + the r06
-    * repeat-pair study; 400k vertices, same-JVM pairs only, the default
-    * Δ = 32×mean, every timed run equality-checked). The honest picture
-    * across 5 paired runs per shape (`GRAPHBENCH_r06.json
-    * repeat_pairs_x32`): delta wins the low-diameter expander outright
-    * (6.6 s vs 12.6 s in the r06 sweep) and wins the wide-weight shape
-    * in 4 of 5 pairs (delta stable at 12.5–15.1 s; Pregel spans
-    * 12.2–22.0 s). On the moderate-diameter sparse shape Pregel holds a
-    * ~13% median edge (≈48 s vs ≈56 s, 4/5 pairs) but carries an
-    * unbounded tail — its r04 run hit 134.4 s, 2.4× the delta band,
-    * and its cross-sweep history spans 41–134 s while delta stays in a
-    * narrow 52–70 s band. Delta-stepping stays the default: two outright
-    * wins plus bounded worst-case on the third beats a one-shape median
-    * edge bought with tail risk. [[distances]]/[[sssp]] remain as the
-    * label-correcting reference the equality specs compare against. */
-  def deltaDistances[V: ClassTag](g: Graph[V, Double], source: VertexId): Seq[(VertexId, Double)] =
-    deltaSssp(g, source).vertices
-      .filter { case (_, (d, _)) => !d.isInfinite }
-      .map { case (id, (d, _)) => (id, d) }
-      .collect()
-      .toSeq
-
-  /** Distances with local-vs-distributed dispatch. */
-  def autoDistances[V: ClassTag](
-      g: Graph[V, Double], source: VertexId,
-      threshold: Long = DefaultLocalThreshold): Seq[(VertexId, Double)] =
-    if (smallEnough(g, threshold))
-      localSssp(g.edges.collect().map(e => (e.srcId, e.dstId, e.attr)), source)
-        .map { case (id, (d, _)) => (id, d) }.toSeq
-    else deltaDistances(g, source)
-
   /** Single-pair path with local-vs-Pregel dispatch. */
   def autoPath[V: ClassTag](
       g: Graph[V, Double], source: VertexId, target: VertexId,
       threshold: Long = DefaultLocalThreshold): Option[(Double, Seq[VertexId])] =
-    if (smallEnough(g, threshold)) {
+    if (g.edges.count() <= threshold) {
       val state = localSssp(g.edges.collect().map(e => (e.srcId, e.dstId, e.attr)), source)
       state.get(target).map { case (d, _) =>
         var ids = List(target)

@@ -105,8 +105,6 @@ final class GraphCatalog[V, E] {
       case None => false
     }
 
-  def dropAll(): Unit = list.foreach(drop)
-
   /** Cache and force materialization so queries never pay projection cost.
     * Each side is persisted independently: `Graph.fromEdges` pre-assigns a
     * level to the edge RDD but can leave the derived vertex RDD unpersisted,

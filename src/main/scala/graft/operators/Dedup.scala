@@ -153,26 +153,19 @@ object Dedup {
     * oracle mode to preserve. dfreq is corpus-sized — one row per
     * distinct shingle — so it is NOT broadcast: shuffle join on the
     * natural key, AQE localizes it when small. */
-  /** Bucket count of the prefix/band stores — 16, now MEASURED rather
-    * than inherited (the VERDICT r5 watch item asked whether 16 caps the
-    * exchange-free self-joins at half this box's 32 cores).
+  /** Bucket count of the prefix/band stores — MEASURED, not inherited.
     * BUCKETSWEEP_r06.json (interleaved {16, 32, 64} rounds at sf0.1,
     * identical pair sets required per config): q24 warm min 1.50 s at 16
-    * vs 1.65 s at both 32 and 64; q25 0.34 s vs 0.43/0.45. The
-    * parallelism-cap hypothesis is refuted at this scale — the stores
-    * are small enough that per-task scheduling and file overhead beat
-    * the extra cores, and the verify stage (not the bucketed join)
-    * dominates q24. On a real cluster size buckets to the per-core scan
-    * budget of one bucket of the FULL index; `-Dgraft.store.buckets=N`
-    * overrides for sweeps (the store key carries the count, so
+    * vs 1.65 s at both 32 and 64; q25 0.34 s vs 0.43/0.45 — per-task
+    * scheduling and file overhead beat the extra cores at this scale. On
+    * a real cluster size buckets to the per-core scan budget of one
+    * bucket of the FULL index (the store key carries the count, so
     * differently-bucketed stores never alias). */
-  def storeBuckets: Int =
-    sys.props.get("graft.store.buckets").map(_.toInt).getOrElse(16)
+  val storeBuckets: Int = 16
 
-  def docJaccardPrefixes(s: SparkSession, dir: String): DataFrame = {
-    val b = storeBuckets
-    graft.store.Materialized.bucketedRelation(s, s"jprefix:$dir:b$b",
-      Seq("h1", "h2"), b) {
+  def docJaccardPrefixes(s: SparkSession, dir: String): DataFrame =
+    graft.store.Materialized.bucketedRelation(s, s"jprefix:$dir:b$storeBuckets",
+      Seq("h1", "h2"), storeBuckets) {
       import s.implicits._
       val posting = docShingles(s, dir)
         .select($"doc_id", size($"sh").as("n"), explode($"sh").as("shingle"))
@@ -186,7 +179,6 @@ object Dedup {
         .filter($"rn" <= prefixLen($"n"))
         .select($"doc_id", $"h1", $"h2", $"rn", $"n")
     }
-  }
 
   /** Hashed shingle sets (doc_id, sh: array<bigint>) as a session
     * materialized relation: the verify stage only ever compares xxhash64
@@ -303,12 +295,10 @@ object Dedup {
     * the one-time build stays visible in the bench's cold column. (The
     * streaming path keeps its own persisted band index — `DedupStream` —
     * built incrementally from batches, never from this store.) */
-  def docBands(s: SparkSession, dir: String, family: HashFamily): DataFrame = {
-    val b = storeBuckets
-    graft.store.Materialized.bucketedRelation(s, s"bands:$family:$dir:b$b",
-      Seq("band", "bhash"), b)(
+  def docBands(s: SparkSession, dir: String, family: HashFamily): DataFrame =
+    graft.store.Materialized.bucketedRelation(s, s"bands:$family:$dir:b$storeBuckets",
+      Seq("band", "bhash"), storeBuckets)(
       bandsOf(docShingles(s, dir), family))
-  }
 
   /** LSH candidate pairs (pre-verification) from a band-bucket relation —
     * the self-join both the batch pipeline and the recall spec share, so

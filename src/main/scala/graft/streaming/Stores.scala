@@ -181,40 +181,6 @@ private[graft] object Stores {
       .orElse(sys.env.get("GRAFT_NUM_BUCKETS")) // forked-JVM lever (sbt run)
       .map(_.toInt).getOrElse(8)
 
-  /** Layout/pruning isolation switches (round 12, THREAD-SCOPED since
-    * round 13): inside [[withLayoutArm]]'s dynamic extent on the CALLING
-    * THREAD, `bucketing = false` makes [[writeBatch]] and [[fold]] treat
-    * their `buckets` as empty (flat layout — [[pruneTo]] then falls back
-    * unfiltered via its missing-column path) and `pruning = false` makes
-    * [[pruneTo]] skip the bucket filter (and its bucket-id driver action)
-    * while the layout stays bucketed. They exist so
-    * [[graft.tools.MaintAb]] can interleave bucketed / unpruned /
-    * unbucketed arms of the SAME binary in one JVM, splitting the
-    * layout's write cost from pruning's read cost. The round-12 version
-    * was a pair of process-wide `@volatile var`s — any OTHER stream in
-    * the same JVM during a flat arm would have written flat batches into
-    * its bucketed stores (review finding); the ThreadLocal scopes the
-    * arm to the bench thread, and production code (which never calls
-    * [[withLayoutArm]]) cannot observe a non-default value. All reads
-    * happen at plan-construction time on the calling thread, so the
-    * scope is exact. */
-  private val layoutArm = new ThreadLocal[(Boolean, Boolean)] {
-    override def initialValue(): (Boolean, Boolean) = (true, true)
-  }
-  private def bucketingEnabled: Boolean = layoutArm.get._1
-  private def pruningEnabled: Boolean = layoutArm.get._2
-
-  /** Run `body` with the layout switches above set on this thread —
-    * bench-tool-only entry point ([[graft.tools.MaintAb]]); a toggled
-    * write against a store built under the other arm still trips the
-    * mixed-layout guard by design. */
-  private[graft] def withLayoutArm[T](bucketing: Boolean, pruning: Boolean)(
-      body: => T): T = {
-    val prev = layoutArm.get
-    layoutArm.set((bucketing, pruning))
-    try body finally layoutArm.set(prev)
-  }
-
   /** THE bucket hash — write layout and read pruning must share it for
     * pruning to be sound. xxhash64 is deterministic across JVMs and
     * never null (a null key hashes to the seed's value — tombstone rows
@@ -233,13 +199,12 @@ private[graft] object Stores {
     * by the task count. */
   def writeBatch(df: DataFrame, batchId: Long, path: String,
       buckets: Seq[Bucket] = Nil): Unit = {
-    val bks = if (bucketingEnabled) buckets else Nil
-    requireLayoutMatches(df.sparkSession, new Path(path), bks.map(_.pbCol), "writeBatch")
-    val parts = "batch" +: bks.map(_.pbCol)
-    val withPb = withBucketCols(df, bks).withColumn("batch", lit(batchId))
+    requireLayoutMatches(df.sparkSession, new Path(path), buckets.map(_.pbCol), "writeBatch")
+    val parts = "batch" +: buckets.map(_.pbCol)
+    val withPb = withBucketCols(df, buckets).withColumn("batch", lit(batchId))
     val out =
-      if (bks.isEmpty) withPb
-      else withPb.repartition(bks.map(b => col(b.pbCol)): _*)
+      if (buckets.isEmpty) withPb
+      else withPb.repartition(buckets.map(b => col(b.pbCol)): _*)
     out.write.mode(SaveMode.Overwrite).option("partitionOverwriteMode", "dynamic")
       .partitionBy(parts: _*).parquet(path)
   }
@@ -355,7 +320,7 @@ private[graft] object Stores {
     * bucket column (a legacy layout, or a spec's hand-built fixture)
     * falls back unfiltered. */
   def pruneTo(df: DataFrame, b: Bucket, keys: DataFrame): DataFrame =
-    if (!pruningEnabled || !df.columns.contains(b.pbCol)) df
+    if (!df.columns.contains(b.pbCol)) df
     else {
       val ids = bucketIdsOf(keys, b)
       // a restriction touching EVERY bucket prunes nothing — skip the
@@ -587,7 +552,6 @@ private[graft] object Stores {
   def fold(s: SparkSession, path: String, throughBatch: Long,
       buckets: Seq[Bucket] = Nil)(
       stage: DataFrame => DataFrame): Unit = {
-    val bks = if (bucketingEnabled) buckets else Nil
     val root = new Path(path)
     val fs = fsOf(s, root)
     if (!fs.exists(root)) return
@@ -625,8 +589,8 @@ private[graft] object Stores {
     // another layout beside it); deterministic order for a stable message
     leftover.toSeq.sorted.foreach { lb =>
       layoutColsOf(fs, new Path(root, s"batch=$lb")).foreach { was =>
-        if (was != bks.map(_.pbCol)) throw new IllegalStateException(
-          s"fold($root): staging a [${bks.map(_.pbCol).mkString(",")}] generation " +
+        if (was != buckets.map(_.pbCol)) throw new IllegalStateException(
+          s"fold($root): staging a [${buckets.map(_.pbCol).mkString(",")}] generation " +
             s"beside [${was.mkString(",")}] live batch $lb of " +
             s"${leftover.toSeq.sorted.mkString("{", ",", "}")} would mix directory " +
             "layouts and wedge partition discovery. A layout migration must fold " +
@@ -645,16 +609,16 @@ private[graft] object Stores {
       // layouts write it under an all-zeros bucket path so partition
       // discovery keeps one consistent directory depth
       val leaf =
-        if (bks.isEmpty) tmp
-        else new Path(tmp, bks.map(b => s"${b.pbCol}=0").mkString("/"))
+        if (buckets.isEmpty) tmp
+        else new Path(tmp, buckets.map(b => s"${b.pbCol}=0").mkString("/"))
       staged.repartition(1).write.mode(SaveMode.Overwrite).parquet(leaf.toString)
-    } else if (bks.isEmpty) {
+    } else if (buckets.isEmpty) {
       staged.write.mode(SaveMode.Overwrite).parquet(tmp.toString)
     } else {
-      withBucketCols(staged, bks)
-        .repartition(bks.map(b => col(b.pbCol)): _*)
+      withBucketCols(staged, buckets)
+        .repartition(buckets.map(b => col(b.pbCol)): _*)
         .write.mode(SaveMode.Overwrite)
-        .partitionBy(bks.map(_.pbCol): _*)
+        .partitionBy(buckets.map(_.pbCol): _*)
         .parquet(tmp.toString)
     }
     if (!fs.rename(tmp, new Path(root, s"batch=$stagingId")))

@@ -91,7 +91,7 @@ object StreamServe {
     val (inDir, storeDir) = (s"$root/in", s"$root/store")
     val e = graft.Tables.events(s, dir)
       .select($"user_id", $"event_type", $"ts_us").cache()
-    val mid = e.agg(expr("percentile_approx(ts_us, 0.5)")).head.getLong(0)
+    val mid = e.agg(expr("percentile_approx(ts_us, 0.5)")).head().getLong(0)
     writeSlices(inDir, "ev", Seq(e.filter($"ts_us" > mid), e.filter($"ts_us" <= mid)))
     FunnelStream.start(s, inDir, storeDir).awaitTermination()
     e.unpersist()
@@ -145,7 +145,7 @@ object StreamServe {
     val e = graft.Tables.events(s, dir)
       .select($"event_type".as("grp"), $"value".cast("double").as("value"), $"ts_us")
       .cache()
-    val mid = e.agg(expr("percentile_approx(ts_us, 0.5)")).head.getLong(0)
+    val mid = e.agg(expr("percentile_approx(ts_us, 0.5)")).head().getLong(0)
     writeSlices(inDir, "m", Seq(e.filter($"ts_us" <= mid).drop("ts_us")))
     KllStream.start(s, inDir, stateDir).awaitTermination()
     // second lifetime: the late half arrives only now — a restarted query

@@ -10,7 +10,7 @@
 // (r*17) div (20*deg) per source, summed exactly.
 //
 // Results are asserted EQUAL (full collect compare) every run, and the
-// arms alternate O,N,N,O so box drift cancels (the AbPairStore
+// arms alternate O,N,N,O so box drift cancels (the interleaved A/B
 // pattern). Run: sbt 'runMain graft.tools.ProbeQ90 <sfDir> [rounds]'
 package graft.tools
 

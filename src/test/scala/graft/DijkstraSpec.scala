@@ -71,13 +71,16 @@ class DijkstraSpec extends AnyFunSuite {
     assert(Dijkstra.autoPath(graphOf(edges), 0L, 3L).isEmpty)
   }
 
-  test("ssspFromEdges: local and forced-distributed dispatch agree") {
+  test("ssspFrameFromEdges: local and forced-distributed dispatch agree") {
     import spark.implicits._
     val edges = Seq(
       (0L, 1L, 1.0), (1L, 2L, 2.0), (0L, 2L, 5.0), (2L, 3L, 1.0), (3L, 0L, 2.0))
       .toDF("src", "dst", "w")
-    val local = Dijkstra.ssspFromEdges(edges, 0L).toMap
-    val dist = Dijkstra.ssspFromEdges(edges, 0L, threshold = 0L).toMap
+    def run(threshold: Long): Map[Long, Double] =
+      Dijkstra.ssspFrameFromEdges(edges, 0L, threshold).collect()
+        .map(r => r.getLong(0) -> r.getDouble(1)).toMap
+    val local = run(Dijkstra.DefaultLocalThreshold)
+    val dist = run(0L)
     assert(local === Map(0L -> 0.0, 1L -> 1.0, 2L -> 3.0, 3L -> 4.0))
     assert(dist === local)
   }

@@ -256,11 +256,11 @@ class EveGraphSpec extends AnyFunSuite {
     // capture the fixture as JSON-lines snapshots (what a REST capture
     // would produce), then bootstrap purely from files
     Seq(
-      ("systems.jsonl", StarMap.systemResponses.toDS.toDF()),
-      ("stargates.jsonl", StarMap.stargateResponses.toDS.toDF()),
-      ("kills.jsonl", StarMap.killSnapshots.toDS.toDF()),
-      ("jumps.jsonl", StarMap.jumpSnapshots.toDS.toDF()),
-      ("signatures.jsonl", StarMap.wormholeSignatures.toDS.toDF()),
+      ("systems.jsonl", StarMap.systemResponses.toDS().toDF()),
+      ("stargates.jsonl", StarMap.stargateResponses.toDS().toDF()),
+      ("kills.jsonl", StarMap.killSnapshots.toDS().toDF()),
+      ("jumps.jsonl", StarMap.jumpSnapshots.toDS().toDF()),
+      ("signatures.jsonl", StarMap.wormholeSignatures.toDS().toDF()),
     ).foreach { case (name, df) =>
       val tmp = s"$snap/_w_$name"
       df.coalesce(1).write.json(tmp)

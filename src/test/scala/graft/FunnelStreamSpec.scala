@@ -47,7 +47,7 @@ class FunnelStreamSpec extends AnyFunSuite {
     import spark.implicits._
     val e = events.cache()
     val want = batchWant
-    val mid = e.agg(expr("percentile_approx(ts_us, 0.5)")).head.getLong(0)
+    val mid = e.agg(expr("percentile_approx(ts_us, 0.5)")).head().getLong(0)
     val inOrder = streamSliced(Seq(e.filter($"ts_us" <= mid), e.filter($"ts_us" > mid)))
     val byUser = streamSliced(Seq(
       e.filter($"user_id" % 3 === 0), e.filter($"user_id" % 3 === 1),
@@ -60,7 +60,7 @@ class FunnelStreamSpec extends AnyFunSuite {
     import spark.implicits._
     val e = events.cache()
     val want = batchWant
-    val mid = e.agg(expr("percentile_approx(ts_us, 0.5)")).head.getLong(0)
+    val mid = e.agg(expr("percentile_approx(ts_us, 0.5)")).head().getLong(0)
     // LATEST events arrive first, earliest last: the final slice contains
     // every user's true first view, invalidating the anchor every touched
     // user derived in earlier batches
@@ -77,7 +77,7 @@ class FunnelStreamSpec extends AnyFunSuite {
     import spark.implicits._
     val e = events.cache()
     val want = batchWant
-    val mid = e.agg(expr("percentile_approx(ts_us, 0.5)")).head.getLong(0)
+    val mid = e.agg(expr("percentile_approx(ts_us, 0.5)")).head().getLong(0)
     val store = streamSliced(Seq(e.filter($"ts_us" <= mid), e.filter($"ts_us" > mid)))
     FunnelStream.compact(spark, store, throughBatch = 1L)
     assert(snapshotOf(store) === want, "compaction changed the snapshot")

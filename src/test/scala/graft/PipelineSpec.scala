@@ -226,7 +226,7 @@ class PipelineSpec extends AnyFunSuite {
     // query at sf0.001; assert half that as the floor
     val nQ = float.select($"query_id").distinct().count()
     assert(shared.count() >= nQ * 3, "mean per-query overlap with float path below 3/10")
-    val worst = shared.groupBy($"query_id").count().agg(min($"count")).head.getLong(0)
+    val worst = shared.groupBy($"query_id").count().agg(min($"count")).head().getLong(0)
     assert(worst >= 2L, s"worst per-query overlap $worst/10")
     // wherever both paths return a hit, the rerank must have erased the
     // PQ approximation entirely: identical float cosine

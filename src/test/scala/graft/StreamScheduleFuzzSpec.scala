@@ -37,24 +37,49 @@ class StreamScheduleFuzzSpec extends AnyFunSuite {
   private val SeedBase: Long =
     sys.env.get("SPARK_GRAFT_FUZZ_SEED").map(_.toLong).getOrElse(0L)
 
+  /** Wall-clock budget of ONE fuzz case, counted from the moment the
+    * case starts running (queueing behind other cases is not charged).
+    * The slowest WHOLE lane takes ~2.5 min on a 4-core box, so a case
+    * past it is wedged, not slow: the lane fails with that case's
+    * planned schedule instead of hanging the suite. */
+  private val CaseTimeout = scala.concurrent.duration.Duration(15, "min")
+
   /** Execute independent fully-planned fuzz cases concurrently. Every
     * case's plan was already drawn from the lane RNG, so execution order
     * cannot perturb determinism; each case owns its temp store. All
     * failures surface (first thrown, rest printed), matching the
-    * sequential lane's fail-with-schedule contract. */
+    * sequential lane's fail-with-schedule contract; a case that outruns
+    * [[CaseTimeout]] fails the lane at once, printing its plan. */
   private def inParallel[P](plans: Seq[P], threads: Int = 8)(run: P => Unit): Unit = {
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(threads)
+    // daemon threads: a wedged case that ignores the interrupt must not
+    // keep the test JVM alive after the lane has failed
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(threads, { (r: Runnable) =>
+      val t = new Thread(r, "fuzz-case"); t.setDaemon(true); t
+    })
     try {
-      import scala.concurrent.{Await, ExecutionContext, Future}
-      import scala.concurrent.duration.Duration
+      import scala.concurrent.{Await, ExecutionContext, Future, Promise, TimeoutException}
+      import scala.concurrent.duration.DurationLong
       implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
-      val futs = plans.map(p => Future(run(p)))
-      val errs = futs.flatMap(f =>
-        scala.util.Try(Await.result(f, Duration.Inf)).failed.toOption)
+      val started = plans.map(_ => Promise[Long]())
+      val futs = plans.indices.map { i =>
+        Future { started(i).success(System.nanoTime()); run(plans(i)) }
+      }
+      // cases are awaited in submission order: the pool's queue is FIFO
+      // and every earlier case has finished, so case i holds a thread
+      // (or gets one at once) and its start stamp bounds the wait
+      val errs = plans.indices.flatMap { i =>
+        val t0 = Await.result(started(i).future, CaseTimeout)
+        val left = CaseTimeout - (System.nanoTime() - t0).nanos
+        try Await.ready(futs(i), left) catch {
+          case _: TimeoutException =>
+            fail(s"[fuzz] case exceeded $CaseTimeout; planned schedule:\n${plans(i)}")
+        }
+        futs(i).value.get.failed.toOption
+      }
       if (errs.size > 1) errs.tail.foreach(e =>
         System.err.println(s"[fuzz] additional failure: ${e.getMessage}"))
       errs.headOption.foreach(e => throw e)
-    } finally pool.shutdown()
+    } finally pool.shutdownNow()
   }
 
   private def tmp() =
@@ -539,7 +564,7 @@ class StreamScheduleFuzzSpec extends AnyFunSuite {
       batches += ((true, wave))
       insertedSoFar ++= wave
       if (rnd.nextInt(10) < 7) {
-        val candidates = (insertedSoFar -- retiredSoFar).toSeq.sorted
+        val candidates = insertedSoFar.diff(retiredSoFar).toSeq.sorted
         if (candidates.nonEmpty) {
           val k = 1 + rnd.nextInt(math.min(8, candidates.size))
           val picks = rnd.shuffle(candidates).take(k)
